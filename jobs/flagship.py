@@ -80,7 +80,7 @@ def main() -> None:
         spark,
         os.path.join(args.out, "tiles"),
         lambda: tile_aggregate(
-            matched, res=args.res, cell_col="cell", contributor_col="contributor"
+            matched, res=args.res, cell_col="cell", boundary_col="boundary_id"
         ),
         cell_col="cell",
         force=not args.resume,
@@ -88,13 +88,14 @@ def main() -> None:
     elapsed = time.perf_counter() - t0
     n_pages = pages.count()
     n_tiles = tiles.count()
+    checksum = table_checksum(tiles)
     print(
         f"flagship: {n_pages} pages -> {n_tiles} tiles in {elapsed:.2f}s "
-        f"({n_pages / elapsed:.0f} pages/sec); checksum={table_checksum(tiles)}"
+        f"({n_pages / elapsed:.0f} pages/sec); checksum={checksum}"
     )
     # sanity: identical to the uncheckpointed single-plan pipeline
-    direct = flagship(spark, args.sf_dir, multiplier=args.multiplier, res=args.res)
-    assert direct.count() >= n_tiles
+    direct = flagship(spark, args.sf_dir, args.multiplier, args.n_boundaries, args.res)
+    assert table_checksum(direct) == checksum
     spark.stop()
 
 

@@ -26,11 +26,13 @@ def flagship(
     res: int = FLAGSHIP_RES,
 ) -> DataFrame:
     """scan pages → geocode → cell-encode → PIP join vs broadcast
-    boundary index → per-tile contributor/edit feature vectors.
+    boundary index → per-tile contributor/edit feature vectors plus the
+    distinct boundaries hit per tile (``n_boundaries``).
 
-    Single logical plan: one broadcast join (coarse PIP), one Arrow
-    refine stage, two exchanges (the two-phase tile agg). The
-    `contributor` is the page's site id — the uid analog of the
+    Single pass over pages: 1 scan, 1 Arrow refine stage and 4
+    exchanges (the source spread plus the three tile-cascade phases,
+    which also carry the boundary-id sets), no join above the refine.
+    The `contributor` is the page's site id — the uid analog of the
     reference's element history `[U: osmparsing]`.
     """
     pages = geocoded_pages(spark, sf_dir, multiplier=multiplier, res=res)
@@ -39,22 +41,9 @@ def flagship(
     )
     packed = packed_boundaries(n_boundaries)
     matched = pip_join(pages, packed, res=res)
-    tiles = tile_aggregate(
-        matched, res=res, cell_col="cell", contributor_col="contributor"
+    return tile_aggregate(
+        matched, res=res, cell_col="cell", boundary_col="boundary_id"
     )
-    # boundary hit-count per tile — two-phase distinct, matching the
-    # skew-proof tile-agg shape: phase 1 reduces to distinct
-    # (cell, boundary_id) pairs with map-side partial aggregation (a
-    # mega-cell's duplicate hits collapse before the shuffle), phase 2
-    # counts per cell. A single-phase countDistinct would plan an
-    # Expand and funnel every mega-cell row into one reduce group.
-    bhits = (
-        matched.select("cell", "boundary_id")
-        .distinct()
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_boundaries"))
-    )
-    return tiles.join(bhits, "cell", "left").fillna(0, subset=["n_boundaries"])
 
 
 def run_curate(spark: SparkSession, sf_dir: str, out: str) -> tuple[int, int]:

@@ -11,8 +11,10 @@ Scale notes (the 1000-executor story):
 - The polygon set broadcasts (packed flat numpy arrays, rebuilt once
   per Python worker). The points side — the 10^12-row table — never
   shuffles for the PIP join at all: candidate generation is a
-  broadcast-hash join, the refine is a stateless map. The only
-  exchanges in the flagship are the tile-agg groupBys.
+  broadcast-hash join, the refine is a stateless map. The flagship's
+  exchanges are the synthetic source's spread repartition and the
+  three tile-cascade groupBys, which also carry the per-tile boundary
+  sets (4 in all).
 - The kNN join shuffles both sides once, keyed by cell; border
   correctness comes from an in-plan certification bound. The
   scheduled ring passes are a static plan; only the RESIDUE (the
@@ -20,10 +22,10 @@ Scale notes (the 1000-executor story):
   loop — O(log n) passes, each a blocking count over the persisted,
   shrinking residue, each pass re-scanning only the annulus of new
   cells and merging the previous pass's per-probe top-k.
-- Mega-cell skew: distinct-count aggregation is two-phase keyed on
-  (cell, contributor) first — the hot cell's rows spread over the
-  whole cluster in phase 1 — and AQE skew-join splitting is on in the
-  session factory for the join paths.
+- Mega-cell skew: distinct-count aggregation is a three-phase cascade
+  keyed on (cell, contributor, url) first — the hot cell's rows spread
+  over the whole cluster in phase 1 — and AQE skew-join splitting is on
+  in the session factory for the join paths.
 """
 
 from __future__ import annotations
@@ -488,6 +490,7 @@ def tile_aggregate(
     res: int,
     cell_col: str | None = None,
     contributor_col: str = "contributor",
+    boundary_col: str | None = None,
 ) -> DataFrame:
     """Per-tile contributor/edit-count feature vectors (BASELINE.json:6).
 
@@ -501,6 +504,16 @@ def tile_aggregate(
     shuffle is keyed on (cell, contributor, url) so a mega-cell's rows
     spread across the cluster before the per-cell count (J9 salting by
     the distinct key itself).
+
+    ``boundary_col`` (e.g. the ``boundary_id`` of :func:`pip_join`
+    output) adds ``n_boundaries``, the distinct boundaries hit per tile,
+    as the last column. The boundary-id set rides through the same
+    three phases — ``collect_set`` per (cell, uid, url), then the
+    distinct union per (cell, uid) and per cell — so the count costs
+    no second pass over the input and no extra exchange. The set is
+    bounded: a cell's ids are those boundaries whose cover contains the
+    cell, however many pages a mega-cell holds. Callers that pass no
+    ``boundary_col`` keep the plain (non-object) hash aggregates.
     """
     cell = F.col(cell_col) if cell_col else cell_encode_col(F.col("lon"), F.col("lat"), res)
     dow = F.dayofweek("warc_ts")
@@ -510,6 +523,7 @@ def tile_aggregate(
         F.col("url").alias("__url"),
         F.col("lang").alias("__lang"),
         dow.alias("__dow"),
+        *([F.col(boundary_col).alias("__bid")] if boundary_col else []),
     )
     lang_sums = [
         F.sum(F.when(F.col("__lang") == lg, 1).otherwise(0)).alias(f"__n_{lg}")
@@ -528,14 +542,17 @@ def tile_aggregate(
     # over the whole cluster in phases 1-2 and phase 3 only sees
     # #contributors rows per cell. (A url has one contributor — its
     # site — so distinct urls per cell = Σ per-uid distinct urls.)
+    bids = F.array_distinct(F.flatten(F.collect_list("__bids")))
     p1 = base.groupBy("cell", "__uid", "__url").agg(
-        F.count(F.lit(1)).alias("__n"), *lang_sums, *dow_sums
+        F.count(F.lit(1)).alias("__n"), *lang_sums, *dow_sums,
+        *([F.collect_set("__bid").alias("__bids")] if boundary_col else []),
     )
     p2 = p1.groupBy("cell", "__uid").agg(
         F.count(F.lit(1)).alias("__n_urls"),
         F.sum("__n").alias("__n"),
         *[F.sum(f"__n_{lg}").alias(f"__n_{lg}") for lg in LANGS],
         *[F.sum(f"__d{d}").alias(f"__d{d}") for d in range(1, 8)],
+        *([bids.alias("__bids")] if boundary_col else []),
     )
     return p2.groupBy("cell").agg(
         F.sum("__n").alias("n_edits"),
@@ -543,6 +560,7 @@ def tile_aggregate(
         F.sum("__n_urls").alias("n_urls"),
         *[F.sum(f"__n_{lg}").alias(f"n_{lg}") for lg in LANGS],
         F.array(*[F.sum(f"__d{d}") for d in range(1, 8)]).alias("activity_hist"),
+        *([F.size(bids).cast("long").alias("n_boundaries")] if boundary_col else []),
     )
 
 

@@ -17,6 +17,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_ARROW_BATCH = 10_000  # SURVEY.md §2.10: tuned for ring-heavy kernels
+OBJECT_AGG_HASH_GROUPS = 1 << 16
+MAX_DRIVER_MEM_MB = 48 * 1024  # the 128 GiB box of SURVEY.md Appendix A
+
+
+def default_driver_mem() -> str:
+    """A quarter of physical memory, between 1 GiB and 48 GiB. A heap
+    larger than the host lets the JVM grow until the kernel kills it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, phys_mb // 4))}m"
 
 
 def get_spark(
@@ -51,6 +60,16 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # object aggregates (collect_set/collect_list/percentile) keep
+        # this many groups per task in the hash map before switching to
+        # the sort-based path. Spark's 128 makes every partial
+        # aggregation of the tile cascade's boundary sets sort, which
+        # costs more and takes several full runs of JIT warm-up to
+        # settle; 64k groups bound the map to tens of MB per task.
+        .config(
+            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+            str(OBJECT_AGG_HASH_GROUPS),
+        )
         # --- Arrow / pandas-UDF path ------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
@@ -62,8 +81,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # single-JVM local mode: driver heap is ALL executor memory too;
         # size it so 32 concurrent tasks' hash aggregations don't GC-thrash
-        # (the box has 128 GiB — SURVEY.md Appendix A)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -204,6 +204,71 @@ def test_parallelism_invariance(spark, sf_dir):
     assert h1 == h2
 
 
+def _two_branch_flagship(spark, sf_dir):
+    """The flagship as once formulated: the tile cascade, plus a second
+    branch — distinct (cell, boundary_id), then a count per cell —
+    left-joined back onto the tiles."""
+    pages = geocoded_pages(spark, sf_dir, res=7).withColumn(
+        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
+    )
+    matched = pip_join(pages, packed_boundaries(50), res=7)
+    tiles = tile_aggregate(matched, res=7, cell_col="cell")
+    bhits = (
+        matched.select("cell", "boundary_id")
+        .distinct()
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_boundaries"))
+    )
+    return tiles.join(bhits, "cell", "left").fillna(0, subset=["n_boundaries"])
+
+
+def test_folded_boundary_count_matches_two_branch_and_numpy(spark, sf_dir, pages_pd):
+    """n_boundaries folded into the tile cascade ≡ the two-branch
+    formula ≡ a numpy brute-force twin (distinct ray-cast hits per
+    cell), including the cells of the fixed overlapping and edge-case
+    boundaries (bids 0–7); the whole tile table hashes identically."""
+    from osm_data_classification_spark.io import table_checksum
+    from osm_data_classification_spark.jobs_api import flagship
+
+    folded = flagship(spark, sf_dir)
+    two_branch = _two_branch_flagship(spark, sf_dir)
+    assert table_checksum(folded) == table_checksum(two_branch)
+    assert dict(folded.dtypes)["n_boundaries"] == "bigint"
+    got = {r["cell"]: r["n_boundaries"] for r in folded.select("cell", "n_boundaries").collect()}
+    old = {r["cell"]: r["n_boundaries"] for r in two_branch.select("cell", "n_boundaries").collect()}
+
+    packed = packed_boundaries(50)
+    lon = pages_pd["lon"].to_numpy()
+    lat = pages_pd["lat"].to_numpy()
+    cell = pages_pd["cell"].to_numpy()
+    hits: dict[int, set[int]] = {}
+    for b in range(packed.n_boundaries):
+        inside = packed.contains(np.full(len(lon), b), lon, lat)
+        for c in np.unique(cell[inside]):
+            hits.setdefault(int(c), set()).add(int(packed.boundary_id[b]))
+    want = {c: len(bids) for c, bids in hits.items()}
+
+    assert got == old == want
+    fixed = {c for c, bids in hits.items() if bids & set(range(8))}
+    assert fixed, "no cell hit by the fixed boundaries 0-7"
+
+    # the fixture's cells each sit in one boundary; overlapping hits
+    # (one url in several boundaries, a cell's boundaries split over
+    # urls and contributors) must union across all three phases
+    rows = [
+        (1, 1, "a", 3), (1, 1, "a", 4), (1, 1, "a", 3), (1, 1, "b", 5),
+        (1, 2, "c", 4), (1, 2, "c", 9), (2, 3, "d", 0), (2, 3, "d", 0),
+    ]
+    pdf = pd.DataFrame(rows, columns=["cell", "contributor", "url", "boundary_id"])
+    pdf["lang"] = "en"
+    pdf["warc_ts"] = pd.Timestamp("2024-01-01")
+    overl = tile_aggregate(
+        spark.createDataFrame(pdf), res=7, cell_col="cell", boundary_col="boundary_id"
+    )
+    got = {r["cell"]: r["n_boundaries"] for r in overl.collect()}
+    assert got == pdf.groupby("cell")["boundary_id"].nunique().to_dict() == {1: 4, 2: 1}
+
+
 def test_explode_kring_no_duplicate_cells_any_ring(spark):
     """The exploded k-ring must never yield the same cell twice for one
     probe — the wrap bug class: when 2*ring+1 > 2^res, un-deduped x

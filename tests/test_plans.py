@@ -73,6 +73,18 @@ def test_tile_agg_three_phase_exchanges(spark, sf_dir):
     assert "partial_" in plan
 
 
+def test_tile_agg_without_boundaries_plans_no_object_agg(spark, sf_dir):
+    """Only the boundary-id sets need collect_set/collect_list; callers
+    that pass no boundary_col (geo_tile_agg, the ladder, ...) must keep
+    the plain hash aggregates."""
+    pages = geocoded_pages(spark, sf_dir, res=7).withColumn(
+        "contributor", F.regexp_extract("url", r"site(\d+)", 1).cast("long")
+    )
+    nodes = audit.plan_nodes(tile_aggregate(pages, res=7, cell_col="cell"))
+    assert "ObjectHashAggregate" not in nodes, nodes
+    assert "HashAggregate" in nodes, nodes
+
+
 def test_window_version_chain_single_exchange(spark, sf_dir):
     df = _q("window_version_chain")(spark, sf_dir)
     # both window specs share the partition key -> one hash exchange
@@ -117,14 +129,35 @@ def test_interval_join_is_equi_not_nested_loop(spark, sf_dir):
 
 
 def test_flagship_has_no_expand_on_cell_key(spark, sf_dir):
-    """The per-tile boundary count is a two-phase distinct; a
-    single-phase countDistinct would plan an Expand that funnels every
-    mega-cell row into one reduce group (skew)."""
+    """The per-tile boundary count rides the tile cascade as a bounded
+    id set; a single-phase countDistinct would plan an Expand that
+    funnels every mega-cell row into one reduce group (skew)."""
     from osm_data_classification_spark.jobs_api import flagship
 
     df = flagship(spark, sf_dir)
     nodes = audit.plan_nodes(df)
     assert not any("Expand" in n for n in nodes), nodes
+
+
+def test_flagship_single_pass_over_pages(spark, sf_dir):
+    """The flagship reads pages once: 1 scan, 1 Arrow refine, at most
+    4 exchanges (source spread + 3 cascade phases), and no join above
+    the refine — the boundary count is folded into the tile cascade,
+    not a second branch joined back on cell."""
+    from osm_data_classification_spark.jobs_api import flagship
+
+    df = flagship(spark, sf_dir)
+    nodes = audit.plan_nodes(df)
+    assert nodes.count("Scan") == 1, nodes
+    assert nodes.count("ArrowEvalPython") == 1, nodes
+    assert audit.count_exchanges(df) <= 4, nodes
+    # the tree prints parents before children: what precedes the refine
+    # is the cascade above it
+    plan = audit.simple_plan(df)
+    above = plan[: plan.index("ArrowEvalPython")]
+    for join in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
+        assert join not in above, plan
+    assert audit.join_kinds(df) == ["BroadcastHashJoin"], nodes
 
 
 def test_pip_cover_switches_to_shuffle_join(spark, sf_dir, monkeypatch):
